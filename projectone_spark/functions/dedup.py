@@ -39,16 +39,15 @@ def content_hash(col: Column | str) -> Column:
     return content_hash_of_norm(normalize(col))
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                parallelism: int | None = None) -> DataFrame:
+def exact_dedup(df: DataFrame, text_col: str = "text",
+                id_col: str = "doc_id") -> DataFrame:
     """One row per distinct normalized text: the minimum id wins, with the
     duplicate count. Single hash aggregation — the canonical exact-dedup
     plan at any scale."""
     # hash-spread the raw rows by the unique id and hash AFTER the
     # exchange (r13): projected below it, the md5/normalize chain ran
     # inside the serial one-per-input-split map task
-    base = (spread(df.select(F.col(id_col), F.col(text_col)), parallelism,
-                   by=id_col)
+    base = (spread(df.select(F.col(id_col), F.col(text_col)), by=id_col)
             .select(F.col(id_col),
                     content_hash(text_col).alias("content_md5")))
     return (base.groupBy("content_md5")
@@ -91,13 +90,12 @@ def minhash_sig_cols(shingle_col: Column | str,
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", num_hashes: int = 4,
-                       k: int = 5, parallelism: int | None = None) -> DataFrame:
+                       k: int = 5) -> DataFrame:
     """MinHash via seeded md5 over char-k-gram shingles (the
     :func:`minhash_sig_cols` recipe), one row per document."""
     # spread raw rows by the unique id; normalize after the exchange
     # (r13 — the serial-map-task reason documented at exact_dedup)
-    base = (spread(df.select(F.col(id_col), F.col(text_col)), parallelism,
-                   by=id_col)
+    base = (spread(df.select(F.col(id_col), F.col(text_col)), by=id_col)
             .select(F.col(id_col), normalize(text_col).alias("__norm")))
     base = base.withColumn("__sh", F.array_distinct(shingles_of_norm("__norm", k)))
     sig = [c.alias(f"mh{i}")
@@ -144,8 +142,7 @@ def triangle_self_join(df: DataFrame, key_cols: Sequence[str],
 def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", num_hashes: int = 4,
                         k: int = 5, band_chars: int | None = None,
-                        blocks: int = 1,
-                        parallelism: int | None = None) -> DataFrame:
+                        blocks: int = 1) -> DataFrame:
     """LSH banding: bucket docs by a prefix of the first minhash and emit
     within-bucket pairs with their estimated Jaccard (fraction of equal
     minhashes). Only (band, id, signature) tuples shuffle; the signature
@@ -171,7 +168,7 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
     band table was built with)."""
     if band_chars is None:
         band_chars = auto_band_chars(df.count())
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, k, parallelism)
+    sigs = minhash_signatures(df, text_col, id_col, num_hashes, k)
     sigs = sigs.localCheckpoint(eager=False)
     mh_cols = [f"mh{i}" for i in range(num_hashes)]
     banded = sigs.withColumn("band", F.substring(F.col("mh0"), 1, band_chars))
@@ -192,15 +189,14 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
                         F.round(est, 4).alias("est_jaccard"))
 
 
-def simhash_frame(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  parallelism: int | None = None) -> DataFrame:
+def simhash_frame(df: DataFrame, text_col: str = "text",
+                  id_col: str = "doc_id") -> DataFrame:
     """16-bit SimHash: bit_j = sign of Σ_tokens (hexval(md5(tok)[j]) - 7.5).
 
     Hex-digit arithmetic keeps it reproducible in any engine with md5 +
     string ops. Output column ``simhash`` is the 16-char bit string.
     """
-    base = (spread(df.select(F.col(id_col), F.col(text_col)), parallelism,
-                   by=id_col)
+    base = (spread(df.select(F.col(id_col), F.col(text_col)), by=id_col)
             .select(F.col(id_col), normalize(text_col).alias("__norm")))
     base = base.withColumn("__toks", F.array_distinct(tokens_of_norm("__norm")))
     # hash each distinct token once; bits reuse the materialized hash array
@@ -243,8 +239,7 @@ def auto_band_chars(n_docs: int) -> int:
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", band_chars: int | None = None,
-                        threshold: float = 0.0,
-                        parallelism: int | None = None) -> DataFrame:
+                        threshold: float = 0.0) -> DataFrame:
     """Exact token-set Jaccard for candidate pairs bucketed by a coarse
     content-hash prefix. The exact verifier behind the MinHash estimate.
 
@@ -260,8 +255,8 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     # and shuffle-file reuse then delivers the normalize/hash chain to
     # both branches computed once — above the exchange each branch
     # re-derives it (measured 3x the CPU at sf0.1)
-    base = spread(df.select(F.col(id_col), normalize(text_col).alias("__norm")),
-                  parallelism)
+    base = spread(df.select(F.col(id_col),
+                            normalize(text_col).alias("__norm")))
     toks = base.select(
         F.col(id_col),
         F.array_distinct(tokens_of_norm("__norm")).alias("toks"),
@@ -279,8 +274,8 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
 
 
 def winnow_fingerprints(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", k: int = 5, w: int = 4,
-                        parallelism: int | None = None) -> DataFrame:
+                        id_col: str = "doc_id", k: int = 5,
+                        w: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     SIGMOD 2003 — the MOSS algorithm): hash every character ``k``-gram,
     slide a window of ``w`` consecutive hashes, and keep each window's
@@ -318,7 +313,7 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     # written as length(__norm) > 0 it pushes below the exchange and
     # re-derives the whole regex chain serially in the map task; rlike
     # early-exits at the first match
-    base = (spread(df.select(F.col(id_col), F.col(text_col)), parallelism)
+    base = (spread(df.select(F.col(id_col), F.col(text_col)))
             .filter(F.lower(F.col(text_col)).rlike("[a-z0-9]"))
             .select(F.col(id_col), normalize(text_col).alias("__norm")))
     # __norm / __h are each referenced multiple times downstream, which
@@ -345,8 +340,8 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
 
 def winnow_fingerprint_pairs(df: DataFrame, text_col: str = "text",
                              id_col: str = "doc_id", k: int = 5, w: int = 4,
-                             max_df: int = 128, min_shared: int = 1,
-                             parallelism: int | None = None) -> DataFrame:
+                             max_df: int = 128,
+                             min_shared: int = 1) -> DataFrame:
     """Candidate near-dup pairs by shared winnowing fingerprints, with
     exact Jaccard over the kept fingerprint sets — MOSS's match step.
 
@@ -384,7 +379,7 @@ def winnow_fingerprint_pairs(df: DataFrame, text_col: str = "text",
     # partitions they touch before blocks register.
     from pyspark import StorageLevel
 
-    fp = (winnow_fingerprints(df, text_col, id_col, k, w, parallelism)
+    fp = (winnow_fingerprints(df, text_col, id_col, k, w)
           .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY))
     dfreq = fp.groupBy("fp").agg(F.count(F.lit(1)).alias("__df"))
     kept = (fp.join(dfreq.filter(F.col("__df") <= max_df).select("fp"), "fp")
@@ -669,8 +664,7 @@ def dedup_token_accounting(df: DataFrame, text_col: str = "text",
 
 def cross_doc_ngram_dedup(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", n: int = 8,
-                          max_dup_frac: float = 0.5,
-                          parallelism: int | None = None) -> DataFrame:
+                          max_dup_frac: float = 0.5) -> DataFrame:
     """Cross-document duplicated-n-gram detection (the word-level analogue
     of ExactSubstr dedup, Lee et al. 2022 "Deduplicating Training Data
     Makes Language Models Better"): per document, the fraction of its
@@ -696,8 +690,7 @@ def cross_doc_ngram_dedup(df: DataFrame, text_col: str = "text",
     false merge; at larger corpora raise to a 128-bit key (concat of two
     seeds) rather than shuffling strings.
     """
-    base = (spread(df.select(F.col(id_col), F.col(text_col)), parallelism,
-                   by=id_col)
+    base = (spread(df.select(F.col(id_col), F.col(text_col)), by=id_col)
             .select(F.col(id_col), normalize(text_col).alias("__norm")))
     base = base.withColumn("__toks", tokens_of_norm("__norm"))
     gd = (base.select(
@@ -722,8 +715,7 @@ def cross_doc_ngram_dedup(df: DataFrame, text_col: str = "text",
 
 
 def _duplicate_position_frames(df: DataFrame, text_col: str, id_col: str,
-                               n: int, min_run_tokens: int,
-                               parallelism: int | None):
+                               n: int, min_run_tokens: int):
     """The shared head of the ExactSubstr-approximation pair
     (:func:`duplicate_run_stats` detects, :func:`duplicate_run_removal`
     applies): the checkpointed per-document (position, gram-hash) frame
@@ -734,8 +726,7 @@ def _duplicate_position_frames(df: DataFrame, text_col: str, id_col: str,
         raise ValueError(
             f"min_run_tokens must be >= n (a single duplicated window "
             f"already spans n={n} tokens), got {min_run_tokens}")
-    base = (spread(df.select(F.col(id_col), F.col(text_col)), parallelism,
-                   by=id_col)
+    base = (spread(df.select(F.col(id_col), F.col(text_col)), by=id_col)
             .select(F.col(id_col), normalize(text_col).alias("__norm")))
     base = base.withColumn("__toks", tokens_of_norm("__norm"))
     gd = (base.select(F.col(id_col),
@@ -770,8 +761,7 @@ def _duplicate_position_frames(df: DataFrame, text_col: str, id_col: str,
 
 def duplicate_run_stats(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", n: int = 8,
-                        min_run_tokens: int = 50,
-                        parallelism: int | None = None) -> DataFrame:
+                        min_run_tokens: int = 50) -> DataFrame:
     """Variable-length repeated-substring detection — the distributed
     approximation of ExactSubstr dedup (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better", §4.1: remove MAXIMAL
@@ -819,7 +809,7 @@ def duplicate_run_stats(df: DataFrame, text_col: str = "text",
     from pyspark.sql import Window
 
     gd, dpos = _duplicate_position_frames(df, text_col, id_col, n,
-                                          min_run_tokens, parallelism)
+                                          min_run_tokens)
     w = Window.partitionBy(id_col).orderBy("__pos")
     flagged = (dpos.withColumn("__isl",
                                F.col("__pos") - F.row_number().over(w))
@@ -850,8 +840,7 @@ def duplicate_run_stats(df: DataFrame, text_col: str = "text",
 
 def duplicate_run_removal(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", n: int = 8,
-                          min_run_tokens: int = 50,
-                          parallelism: int | None = None) -> DataFrame:
+                          min_run_tokens: int = 50) -> DataFrame:
     """The APPLY step of the ExactSubstr recipe — Lee et al. 2022 §4.1
     REMOVES the repeated substrings and keeps the rest of the document
     (dropping whole documents, d14's ``keep`` verdict, "destroys the
@@ -878,7 +867,7 @@ def duplicate_run_removal(df: DataFrame, text_col: str = "text",
     from pyspark.sql import Window
 
     gd, dpos = _duplicate_position_frames(df, text_col, id_col, n,
-                                          min_run_tokens, parallelism)
+                                          min_run_tokens)
     w = Window.partitionBy(id_col).orderBy("__pos")
     runs = (dpos.withColumn("__isl",
                             F.col("__pos") - F.row_number().over(w))
@@ -921,8 +910,7 @@ def duplicate_run_removal(df: DataFrame, text_col: str = "text",
 def incremental_lsh_pairs(base: DataFrame, delta: DataFrame,
                           text_col: str = "text", id_col: str = "doc_id",
                           num_hashes: int = 4, k: int = 5,
-                          band_chars: int = 2,
-                          parallelism: int | None = None) -> DataFrame:
+                          band_chars: int = 2) -> DataFrame:
     """Incremental near-dup candidates when ``delta`` documents join an
     existing corpus: every LSH candidate pair with AT LEAST ONE delta
     side — delta×base and delta×delta, never base×base (those were
@@ -947,8 +935,7 @@ def incremental_lsh_pairs(base: DataFrame, delta: DataFrame,
     :func:`lsh_recall_audit` when auditing this index).
     """
     def banded(frame: DataFrame) -> DataFrame:
-        return (minhash_signatures(frame, text_col, id_col, num_hashes, k,
-                                   parallelism)
+        return (minhash_signatures(frame, text_col, id_col, num_hashes, k)
                 .withColumn("band", F.substring(F.col("mh0"), 1, band_chars)))
 
     return lsh_probe_pairs(banded(base), banded(delta), num_hashes, id_col)

@@ -90,16 +90,14 @@ def _shortlist_topk(scored: DataFrame, query_id_col: str,
 
 def knn_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 5,
                    id_col: str = "vec_id", vec_col: str = "embedding",
-                   query_id_col: str = "query_id",
-                   parallelism: int | None = None) -> DataFrame:
+                   query_id_col: str = "query_id") -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     The query side is broadcast (small by construction); each corpus
     partition computes its pair scores independently and only (query_id,
     neighbor_id, score) rows reach the per-query top-k window.
     """
-    c = spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__vec")),
-               parallelism)
+    c = spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__vec")))
     c = c.select(id_col, "__vec", l2_norm(F.col("__vec")).alias("__vn"))
     q = queries.select(F.col(id_col).alias(query_id_col),
                        F.col(vec_col).alias("__qvec"))
@@ -142,10 +140,9 @@ def lsh_bucket(vec_col: Column, num_bits: int = 8) -> Column:
 
 
 def lsh_bucket_stats(df: DataFrame, vec_col: str = "embedding",
-                     num_bits: int = 8,
-                     parallelism: int | None = None) -> DataFrame:
+                     num_bits: int = 8) -> DataFrame:
     """Bucket histogram — the partition map an IVF/LSH ANN index would use."""
-    base = spread(df.select(F.col(vec_col).alias("__vec")), parallelism)
+    base = spread(df.select(F.col(vec_col).alias("__vec")))
     return (base.select(lsh_bucket(F.col("__vec"), num_bits).alias("bucket"))
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("n_vectors")))
@@ -153,11 +150,9 @@ def lsh_bucket_stats(df: DataFrame, vec_col: str = "embedding",
 
 def knn_lsh(corpus: DataFrame, queries: DataFrame, k: int = 5,
             id_col: str = "vec_id", vec_col: str = "embedding",
-            query_id_col: str = "query_id", num_bits: int = 8,
-            parallelism: int | None = None) -> DataFrame:
+            query_id_col: str = "query_id", num_bits: int = 8) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH bucket."""
-    c = spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__vec")),
-               parallelism)
+    c = spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__vec")))
     c = c.select(id_col, "__vec",
                  l2_norm(F.col("__vec")).alias("__vn"),
                  lsh_bucket(F.col("__vec"), num_bits).alias("__bucket"))
@@ -183,8 +178,7 @@ def knn_lsh(corpus: DataFrame, queries: DataFrame, k: int = 5,
 def knn_matryoshka(corpus: DataFrame, queries: DataFrame, k: int = 5,
                    prefix_dims: int = 16, shortlist: int = 25,
                    id_col: str = "vec_id", vec_col: str = "embedding",
-                   query_id_col: str = "query_id",
-                   parallelism: int | None = None) -> DataFrame:
+                   query_id_col: str = "query_id") -> DataFrame:
     """Two-stage KNN over Matryoshka-style nested embeddings (Kusupati
     et al. 2022, "Matryoshka Representation Learning" — MRL trains
     representations whose PREFIX coordinates are themselves usable
@@ -212,8 +206,7 @@ def knn_matryoshka(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
     Returns (query_id, neighbor_id, pscore, score, rank) for the top-k.
     """
-    c = spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__vec")),
-               parallelism)
+    c = spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__vec")))
     c = c.select(id_col, "__vec",
                  F.slice("__vec", 1, prefix_dims).alias("__pvec"))
     c = c.select(id_col, "__vec", "__pvec",
@@ -338,7 +331,6 @@ def knn_ivf(corpus: DataFrame, queries: DataFrame, k: int = 5,
             id_col: str = "vec_id", vec_col: str = "embedding",
             query_id_col: str = "query_id", sample_size: int = 2000,
             cell_col: str | None = None,
-            parallelism: int | None = None,
             centroids: list[list[float]] | None = None) -> DataFrame:
     """IVF approximate top-k: corpus rows live in their nearest-centroid
     cell; each query probes its ``nprobe`` nearest cells and scores exactly
@@ -361,8 +353,8 @@ def knn_ivf(corpus: DataFrame, queries: DataFrame, k: int = 5,
         centroids = ivf_train(corpus, n_clusters, sample_size,
                               vec_col=vec_col, id_col=id_col)
     c = spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__vec"),
-                             *( [F.col(cell_col).alias("__cell")] if cell_col else [])),
-               parallelism)
+                             *([F.col(cell_col).alias("__cell")]
+                               if cell_col else [])))
     if not cell_col:
         c = c.withColumn("__cell", ivf_probes(F.col("__vec"), centroids, 1)[0])
     c = c.select(id_col, "__vec", "__cell", l2_norm(F.col("__vec")).alias("__vn"))
@@ -840,8 +832,8 @@ def pq_adc_tables(vec_col: Column,
 def knn_pq(corpus: DataFrame, queries: DataFrame, k: int = 5,
            m: int = 8, n_codes: int = 16, shortlist: int = 8,
            id_col: str = "vec_id", vec_col: str = "embedding",
-           query_id_col: str = "query_id", sample_size: int = 2000,
-           parallelism: int | None = None) -> DataFrame:
+           query_id_col: str = "query_id",
+           sample_size: int = 2000) -> DataFrame:
     """PQ approximate top-k with exact re-rank: corpus rows are scored via
     ``m`` table lookups (ADC estimate of the cosine), the top
     ``k*shortlist`` shortlist per query is re-scored with the exact
@@ -855,8 +847,7 @@ def knn_pq(corpus: DataFrame, queries: DataFrame, k: int = 5,
     """
     books = pq_train(corpus, m, n_codes, sample_size,
                      vec_col=vec_col, id_col=id_col)
-    c = spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__vec")),
-               parallelism)
+    c = spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__vec")))
     enc = pq_encode_vectorized(books)
     codes = (c.select(id_col, enc(F.col("__vec")).alias("__codes"))
              .localCheckpoint(eager=False))  # encode once, reuse both scans
@@ -1029,8 +1020,7 @@ def sign_words(vec: Column, dims: int) -> list[Column]:
 def knn_binary_hamming(corpus: DataFrame, queries: DataFrame, k: int = 5,
                        shortlist: int = 25, dims: int = 64,
                        id_col: str = "vec_id", vec_col: str = "embedding",
-                       query_id_col: str = "query_id",
-                       parallelism: int | None = None) -> DataFrame:
+                       query_id_col: str = "query_id") -> DataFrame:
     """Two-stage KNN over sign-bit binary quantization: stage 1 ranks
     every candidate by HAMMING distance between packed sign bitmaps
     (2 XOR + 2 popcounts per pair at 64 dims — the binary-quantization
@@ -1051,8 +1041,7 @@ def knn_binary_hamming(corpus: DataFrame, queries: DataFrame, k: int = 5,
     Returns (query_id, neighbor_id, hamming, score, rank) for the top-k.
     """
     n_words = (dims + 31) // 32
-    c = spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__vec")),
-               parallelism)
+    c = spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__vec")))
     cw = c.select(id_col, "__vec",
                   *[w.alias(f"__w{j}")
                     for j, w in enumerate(sign_words(F.col("__vec"), dims))])
@@ -1536,8 +1525,7 @@ def search_ivf_pq_index(codes: DataFrame,
 def knn_sq8(corpus: DataFrame, queries: DataFrame, k: int = 5,
             shortlist: int = 25, dims: int = 64,
             id_col: str = "vec_id", vec_col: str = "embedding",
-            query_id_col: str = "query_id",
-            parallelism: int | None = None) -> DataFrame:
+            query_id_col: str = "query_id") -> DataFrame:
     """Two-stage KNN over scalar int8 quantization (the FAISS
     ``IndexScalarQuantizer(SQ8)`` recipe with symmetric distance):
     stage 1 ranks every candidate by the exact integer squared L2
@@ -1565,8 +1553,7 @@ def knn_sq8(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
     Returns (query_id, neighbor_id, sq_dist, score, rank) for the top-k.
     """
-    c = spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__vec")),
-               parallelism)
+    c = spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__vec")))
     bounds = sq8_bounds(c, dims, vec_col="__vec")
     cc = (c.crossJoin(F.broadcast(bounds))
           .select(id_col, sq8_codes("__vec", dims).alias("__c")))

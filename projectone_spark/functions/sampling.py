@@ -171,7 +171,7 @@ def pack_sequences(df: DataFrame, token_col: str, target_tokens: int,
 
 def contamination_report(corpus: DataFrame, benchmark: DataFrame,
                          text_col: str = "text", id_col: str = "doc_id",
-                         k: int = 5, parallelism: int | None = None) -> DataFrame:
+                         k: int = 5) -> DataFrame:
     """Per-corpus-document overlap with a benchmark set: the fraction of
     the document's distinct char-``k``-gram shingles that appear anywhere
     in the benchmark. 1.0 ⇒ fully contained in the benchmark (leaked).
@@ -188,7 +188,7 @@ def contamination_report(corpus: DataFrame, benchmark: DataFrame,
         # spread raw rows by the unique id; normalize AFTER the exchange
         # (r13 — below it the regex chain ran in the serial map task)
         base = (spread(frame.select(F.col(id_col), F.col(text_col)),
-                       parallelism, by=id_col)
+                       by=id_col)
                 .select(F.col(id_col), normalize(text_col).alias("__norm")))
         sh = F.array_distinct(shingles_of_norm("__norm", k))
         return base.select(F.col(id_col), F.explode(sh).alias("__sh"))
@@ -223,8 +223,7 @@ def bloom_positions(sh_col: Column | str, m_bits: int = 65536,
 def bloom_contamination(corpus: DataFrame, benchmark: DataFrame,
                         text_col: str = "text", id_col: str = "doc_id",
                         group_col: str = "source", k: int = 5,
-                        m_bits: int = 65536, n_hashes: int = 2,
-                        parallelism: int | None = None) -> DataFrame:
+                        m_bits: int = 65536, n_hashes: int = 2) -> DataFrame:
     """Benchmark-decontamination screen through a bloom filter — the
     membership structure large-corpus pipelines (Dolma, DataComp) use when
     the eval-suite shingle set is too big to broadcast verbatim: the
@@ -247,7 +246,7 @@ def bloom_contamination(corpus: DataFrame, benchmark: DataFrame,
     per-document form (the screen a curation pipeline filters on).
     """
     per_doc = bloom_doc_flags(corpus, benchmark, text_col, id_col,
-                              group_col, k, m_bits, n_hashes, parallelism)
+                              group_col, k, m_bits, n_hashes)
     return (per_doc.groupBy(group_col)
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum(F.when(F.col("__n_ex") > 0, 1).otherwise(0))
@@ -278,7 +277,6 @@ def bloom_m_bits(n_keys: int, bits_per_key: int = 16) -> int:
 
 def bloom_bitset(benchmark: DataFrame, text_col: str = "text",
                  k: int = 5, m_bits: int = 65536, n_hashes: int = 2,
-                 parallelism: int | None = None,
                  shingles: DataFrame | None = None) -> list[int]:
     """Pack the benchmark's shingle positions into the ``m_bits/64``-long
     bloom bitset (one bounded aggregation + a ≤1024-row driver collect).
@@ -299,7 +297,7 @@ def bloom_bitset(benchmark: DataFrame, text_col: str = "text",
                              f"got {shingles.columns}")
         sh = shingles
     else:
-        sh = bloom_exact_shingles(benchmark, text_col, k, parallelism)
+        sh = bloom_exact_shingles(benchmark, text_col, k)
     pos = sh.select(F.explode(F.array(
         *bloom_positions("__sh", m_bits, n_hashes))).alias("__p"))
     rows = (pos.select((F.col("__p") / 64).cast("int").alias("__w"),
@@ -316,8 +314,7 @@ def bloom_bitset(benchmark: DataFrame, text_col: str = "text",
 def token_ngram_contamination(corpus: DataFrame, benchmark: DataFrame,
                               n: int = 13, text_col: str = "text",
                               id_col: str = "doc_id",
-                              group_col: str = "source",
-                              parallelism: int | None = None) -> DataFrame:
+                              group_col: str = "source") -> DataFrame:
     """Word-n-gram benchmark decontamination — the GPT-3 recipe (Brown
     et al. 2020, Appendix C): a training document is DIRTY when it shares
     any 13-gram of words with the eval suite. This is the token-level
@@ -355,7 +352,7 @@ def token_ngram_contamination(corpus: DataFrame, benchmark: DataFrame,
     def grams(frame: DataFrame, cols: list[str]) -> DataFrame:
         # normalize after the exchange (r13; hash-spread when the unique
         # id is among the carried columns, round-robin otherwise)
-        base = (spread(frame.select(*cols, F.col(text_col)), parallelism,
+        base = (spread(frame.select(*cols, F.col(text_col)),
                        by=id_col if cols else None)
                 .select(*cols, normalize(text_col).alias("__norm")))
         toks = tokens_of_norm("__norm")
@@ -380,15 +377,13 @@ def token_ngram_contamination(corpus: DataFrame, benchmark: DataFrame,
 
 
 def bloom_exact_shingles(benchmark: DataFrame, text_col: str = "text",
-                         k: int = 5,
-                         parallelism: int | None = None) -> DataFrame:
+                         k: int = 5) -> DataFrame:
     """The benchmark's DISTINCT shingle set as a one-column ``__sh``
     frame — the exact-verdict side of the bloom screen, precomputable
     (and checkpointable) once so a streaming caller's micro-batches skip
     re-deriving it (pass to :func:`bloom_doc_flags` as
     ``bench_shingles``)."""
-    base = spread(benchmark.select(normalize(text_col).alias("__norm")),
-                  parallelism)
+    base = spread(benchmark.select(normalize(text_col).alias("__norm")))
     return (base.select(F.explode(
                 F.array_distinct(shingles_of_norm("__norm", k)))
                 .alias("__sh"))
@@ -399,7 +394,6 @@ def bloom_doc_flags(corpus: DataFrame, benchmark: DataFrame,
                     text_col: str = "text", id_col: str = "doc_id",
                     group_col: str = "source", k: int = 5,
                     m_bits: int = 65536, n_hashes: int = 2,
-                    parallelism: int | None = None,
                     bitset: list[int] | None = None,
                     bench_shingles: DataFrame | None = None) -> DataFrame:
     """Per-document bloom/exact contamination counters — the frame
@@ -436,8 +430,8 @@ def bloom_doc_flags(corpus: DataFrame, benchmark: DataFrame,
         # on bounded frames where the exchange's materialized __norm is
         # the cheaper shape — the A/B measured the above-exchange form
         # +2.3 s on st14 with no p09 win
-        base = spread(frame.select(*cols, normalize(text_col).alias("__norm")),
-                      parallelism)
+        base = spread(frame.select(*cols,
+                                   normalize(text_col).alias("__norm")))
         sh = F.array_distinct(shingles_of_norm("__norm", k))
         return base.select(*cols, F.explode(sh).alias("__sh"))
 
@@ -455,7 +449,7 @@ def bloom_doc_flags(corpus: DataFrame, benchmark: DataFrame,
 
     if bitset is None:
         bitset = bloom_bitset(benchmark, text_col, k, m_bits,
-                              n_hashes, parallelism)
+                              n_hashes)
     elif len(bitset) != m_bits // 64:
         raise ValueError(f"bitset has {len(bitset)} words; m_bits="
                          f"{m_bits} needs {m_bits // 64}")

@@ -51,13 +51,13 @@ def _q6(scale: int) -> int:
     return q
 
 
-def spread(df: DataFrame, parallelism: int | None = None,
-           by: str | Column | None = None) -> DataFrame:
-    """Repartition before a CPU-bound per-row stage.
+def spread(df: DataFrame, by: str | Column | None = None) -> DataFrame:
+    """Repartition before a CPU-bound per-row stage, to the width
+    :func:`_spread_width` derives from the input's plan size.
 
     Small inputs (one parquet file) otherwise run single-task; the exchange
     also acts as a projection barrier (see module docstring). At real scale
-    callers can pass ``parallelism=0`` to skip when inputs are already wide.
+    the derived width saturates at ``defaultParallelism``.
 
     ``by`` names a high-cardinality column (a unique id) to HASH-partition
     on instead of round-robin (r13, guide §2.5): a keyless ``repartition(n)``
@@ -69,9 +69,7 @@ def spread(df: DataFrame, parallelism: int | None = None,
     second exchange. Only pass a column whose values are unique (or near-);
     a hot key would concentrate rows where round-robin cannot.
     """
-    if parallelism == 0:
-        return df
-    n = parallelism or _spread_width(df)
+    n = _spread_width(df)
     if by is not None:
         return df.repartition(n, F.col(by) if isinstance(by, str) else by)
     return df.repartition(n)
@@ -88,17 +86,19 @@ _SPREAD_CHUNK_BYTES = 16 * 1024
 def _spread_width(df: DataFrame) -> int:
     """Scale-adaptive spread width (guide §2: derive partitioning from
     input size, not a constant): ~one task per ``_SPREAD_CHUNK_BYTES`` of
-    the plan's estimated input, clamped to [4, defaultParallelism].
-    Frames without statistics (in-memory micro-batches, local relations)
-    estimate huge and get full width — at real scale every estimate
-    exceeds the cap, so this only narrows tiny local inputs."""
+    the plan's estimated input, clamped to
+    [min(4, defaultParallelism), defaultParallelism] — never wider than
+    the session's cores, even below 4 of them. Frames without statistics
+    (in-memory micro-batches, local relations) estimate huge and get full
+    width — at real scale every estimate exceeds the cap, so this only
+    narrows tiny local inputs."""
     default = df.sparkSession.sparkContext.defaultParallelism
     try:
         est = int(str(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
     except Exception:  # pragma: no cover - stats always exist in practice
         return default
-    return max(4, min(default, est // _SPREAD_CHUNK_BYTES + 1))
+    return min(default, max(4, est // _SPREAD_CHUNK_BYTES + 1))
 
 
 def normalize(col: Column | str) -> Column:
@@ -155,13 +155,13 @@ def fingerprint(col: Column | str) -> Column:
     return fingerprint_of_norm(normalize(col))
 
 
-def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-               parallelism: int | None = None) -> DataFrame:
+def text_stats(df: DataFrame, text_col: str = "text",
+               id_col: str = "doc_id") -> DataFrame:
     """Per-document statistics frame (the `documents` table operator)."""
     # spread raw rows by the unique id; normalize after the exchange
     # (r13 — below it the regex chain ran in the serial map task)
     base = (spread(df.select(F.col(id_col), F.col(text_col).alias("__text")),
-                   parallelism, by=id_col)
+                   by=id_col)
             .select(F.col(id_col), F.col("__text"),
                     normalize("__text").alias("__norm")))
     toks = tokens_of_norm("__norm")
@@ -186,14 +186,13 @@ def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 
 
 def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-            truth_col: str | None = "lang",
-            parallelism: int | None = None) -> DataFrame:
+            truth_col: str | None = "lang") -> DataFrame:
     """Marker-vocabulary language identification (argmax over per-language
     token-hit scores; zh scored by non-ASCII character count; ties resolve
     alphabetically; all-zero → 'und')."""
     keep = [id_col] + ([truth_col] if truth_col else [])
     base = (spread(df.select(*keep, F.col(text_col).alias("__text")),
-                   parallelism, by=id_col)
+                   by=id_col)
             .select(*keep, F.col("__text"),
                     tokens("__text").alias("__toks")))
     def marker_filter(markers: tuple[str, ...]):
@@ -257,8 +256,7 @@ def ngram_join(toks: Column, n: int) -> Column:
 
 def repetition_stats(df: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id",
-                     max_dup_frac: float = 0.3,
-                     parallelism: int | None = None) -> DataFrame:
+                     max_dup_frac: float = 0.3) -> DataFrame:
     """Gopher-style repetition quality signal: the fraction of duplicate
     2-grams and 3-grams per document (1 − distinct/total), with a keep
     flag at ``dup3 ≤ max_dup_frac``. Highly repetitive machine-generated
@@ -269,8 +267,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
     token array — per-document work is O(tokens), nothing shuffles except
     the final result rows.
     """
-    base = (spread(df.select(F.col(id_col), F.col(text_col)), parallelism,
-                   by=id_col)
+    base = (spread(df.select(F.col(id_col), F.col(text_col)), by=id_col)
             .select(F.col(id_col), normalize(text_col).alias("__norm")))
     base = base.withColumn("__toks", tokens_of_norm("__norm"))
 
@@ -298,8 +295,8 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-              parallelism: int | None = None) -> DataFrame:
+def pii_scrub(df: DataFrame, text_col: str = "text",
+              id_col: str = "doc_id") -> DataFrame:
     """Per-document PII redaction: emails, IPv4 addresses, and NNN-NNN-NNNN
     phone numbers are counted and replaced with ``<EMAIL>``/``<IP>``/
     ``<PHONE>`` tags — the standard pretraining-corpus scrub pass. Counts
@@ -308,8 +305,7 @@ def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 
     Returns (id, n_email, n_ipv4, n_phone, scrubbed).
     """
-    base = spread(df.select(F.col(id_col), F.col(text_col).alias("__t")),
-                  parallelism)
+    base = spread(df.select(F.col(id_col), F.col(text_col).alias("__t")))
     scrubbed = F.col("__t")
     for kind in ("email", "ipv4", "phone"):
         scrubbed = F.regexp_replace(scrubbed, PII_PATTERNS[kind],
@@ -369,7 +365,6 @@ def distinctive_terms(df: DataFrame, text_col: str = "text",
 def surprisal_micro_fold(df: DataFrame, key_col: str,
                          text_col: str = "text",
                          scale: int = 1_000_000,
-                         parallelism: int | None = None,
                          spread_by: str | None = None) -> DataFrame:
     """The shared unigram-surprisal fold: per-(key, term) counts joined
     with the per-token surprisal micro-unit ``(scale * N) div c_t`` —
@@ -400,7 +395,7 @@ def surprisal_micro_fold(df: DataFrame, key_col: str,
     # bpe_train_merges codegen note).
     base = df.select(F.col(key_col), F.col(text_col))
     if spread_by is not None:
-        base = spread(base, parallelism, by=spread_by)
+        base = spread(base, by=spread_by)
     exploded = (base.select(F.col(key_col),
                             F.explode(tokens(text_col)).alias("term"))
                 .filter(F.col("term").isNotNull()))
@@ -601,8 +596,7 @@ _BPE_CKPT_EVERY = 16
 
 
 def bpe_train_merges(df: DataFrame, text_col: str = "text",
-                     n_merges: int = 8, sep: str = "_",
-                     parallelism: int | None = None) -> DataFrame:
+                     n_merges: int = 8, sep: str = "_") -> DataFrame:
     """First ``n_merges`` byte-pair-encoding merge rules learned from the
     corpus (Sennrich, Haddow & Birch 2016, "Neural Machine Translation of
     Rare Words with Subword Units" — the BPE tokenizer-training loop):
@@ -653,7 +647,7 @@ def bpe_train_merges(df: DataFrame, text_col: str = "text",
     # generator inputs (verified in-plan), so the inline tokens() chain
     # draws no pushed-down size() filter — and an OUTER generate would
     # fall out of whole-stage codegen (measured 20x the tokenize CPU).
-    words = (spread(df.select(F.col(text_col)), parallelism)
+    words = (spread(df.select(F.col(text_col)))
              .select(F.explode(tokens(text_col)).alias("__w"))
              .filter(F.col("__w") != ""))
     wc = words.groupBy("__w").agg(F.count(F.lit(1)).alias("wc"))
@@ -769,8 +763,7 @@ def _check_bpe_merges(merges: Sequence[tuple[str, str]]) -> None:
 
 
 def bpe_doc_word_counts(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id",
-                        parallelism: int | None = None) -> DataFrame:
+                        id_col: str = "doc_id") -> DataFrame:
     """The ONE corpus-sized computation of the encode pipeline: a
     map-side-combining ``(doc, word) -> count`` aggregate, returned
     ``localCheckpoint``-ed so the vocabulary fold and the per-document
@@ -790,8 +783,7 @@ def bpe_doc_word_counts(df: DataFrame, text_col: str = "text",
     # AQE stages) and a lazy checkpoint lets them race-recompute the
     # tokenize before blocks register (measured as duplicated corpus CPU
     # in every train-and-encode query).
-    return (spread(df.select(F.col(id_col), F.col(text_col)), parallelism,
-                   by=id_col)
+    return (spread(df.select(F.col(id_col), F.col(text_col)), by=id_col)
             .select(F.col(id_col),
                     F.explode(tokens(text_col)).alias("__w"))
             .filter(F.col("__w") != "")
@@ -943,7 +935,6 @@ def bpe_fold(wf: DataFrame, enc: DataFrame,
 def bpe_encode(df: DataFrame, merges: Sequence[tuple[str, str]],
                text_col: str = "text", id_col: str = "doc_id",
                sep: str = "_",
-               parallelism: int | None = None,
                engine: str = "expr") -> DataFrame:
     """Apply trained BPE merge rules to the corpus — the tokenizer
     APPLICATION step completing :func:`bpe_train_merges`'s training step
@@ -985,7 +976,7 @@ def bpe_encode(df: DataFrame, merges: Sequence[tuple[str, str]],
     exact 6-dp half-up ratio n_bpe_tokens/n_chars. Documents with no
     tokens are absent (same contract as unigram_surprise).
     """
-    wf = bpe_doc_word_counts(df, text_col, id_col, parallelism)
+    wf = bpe_doc_word_counts(df, text_col, id_col)
     # the vocabulary folds the CHECKPOINTED doc-word aggregate, so both
     # join inputs read one computed pipeline (zero re-scans); the merge
     # chain runs on these vocabulary rows only
@@ -994,8 +985,7 @@ def bpe_encode(df: DataFrame, merges: Sequence[tuple[str, str]],
 
 
 def unigram_word_freqs(df: DataFrame, text_col: str = "text",
-                       max_word_len: int = 12,
-                       parallelism: int | None = None) -> DataFrame:
+                       max_word_len: int = 12) -> DataFrame:
     """(word, freq) corpus word frequencies for the unigram-LM
     tokenizer — its ONE corpus-sized computation, map-side-combining
     and ``localCheckpoint``-ed (eager=False) because every downstream
@@ -1015,7 +1005,7 @@ def unigram_word_freqs(df: DataFrame, text_col: str = "text",
     # map-task fix, plain explode per its codegen note); EAGER checkpoint
     # so the seeding/Viterbi consumers' separate jobs cannot
     # race-recompute the corpus fold
-    return (spread(df.select(F.col(text_col)), parallelism)
+    return (spread(df.select(F.col(text_col)))
             .select(F.explode(tokens(text_col)).alias("word"))
             .filter((F.col("word") != "")
                     & (F.length("word") <= int(max_word_len)))
@@ -1662,7 +1652,6 @@ def gopher_rules(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                  max_mean_word_len: float = 10.0,
                  min_distinct_stopwords: int = 2,
                  max_top_word_frac: float = 0.08,
-                 parallelism: int | None = None,
                  keep_cols: Sequence[str] = ()) -> DataFrame:
     """Gopher-style document filter battery (Rae et al. 2021, §A1.1): the
     per-rule verdicts pretraining pipelines AND together before a document
@@ -1696,8 +1685,7 @@ def gopher_rules(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
             f"or repeat: {bad or sorted(set(c for c in keep_cols if list(keep_cols).count(c) > 1))}")
     base = (spread(df.select(F.col(id_col),
                              *[F.col(c) for c in keep_cols],
-                             F.col(text_col)),
-                   parallelism, by=id_col)
+                             F.col(text_col)), by=id_col)
             .select(F.col(id_col), *[F.col(c) for c in keep_cols],
                     normalize(text_col).alias("__norm")))
     base = base.withColumn("__toks", tokens_of_norm("__norm"))

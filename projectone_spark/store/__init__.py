@@ -508,7 +508,7 @@ def _derived_readback_schema(schema) -> str | None:
     type outside the proven-safe set (or decimal, handled explicitly)
     appears and the caller must fall back to real inference. Pinned
     against actual inference across the full type matrix by
-    ``tests/test_r12_fastpaths.py``."""
+    ``tests/test_r13_fastpaths.py``."""
     def nullable(node):
         if isinstance(node, dict):
             t = node.get("type")

@@ -82,7 +82,7 @@ def test_repetition_stats_edges(spark):
          (3, "x"),                        # < n tokens -> 0.0
          (4, "")],                        # empty -> 0.0
         "doc_id long, text string")
-    got = {r.doc_id: r for r in repetition_stats(df, parallelism=2).collect()}
+    got = {r.doc_id: r for r in repetition_stats(df).collect()}
     assert got[1].dup_2gram_frac == round(1 - 2 / 7, 4)
     assert not got[1].keep  # dup3 = 1 - 2/6 > 0.3
     assert got[2].dup_2gram_frac == 0.0 and got[2].keep
@@ -98,7 +98,7 @@ def test_pii_scrub_counts_and_redaction(spark):
          (2, "clean text with no pii at all"),
          (3, "ip-ish 999.999.999.999 still matches the permissive v4 shape")],
         "doc_id long, text string")
-    got = {r.doc_id: r for r in pii_scrub(df, parallelism=2).collect()}
+    got = {r.doc_id: r for r in pii_scrub(df).collect()}
     assert (got[1].n_email, got[1].n_ipv4, got[1].n_phone) == (2, 1, 1)
     assert "<EMAIL>" in got[1].scrubbed and "<IP>" in got[1].scrubbed \
         and "<PHONE>" in got[1].scrubbed

@@ -6,7 +6,7 @@ Every entry pins an r13 optimization's bit-identity contract:
   write-time inference pass) must be byte-identical to what inference
   returns, across the full supported type matrix, and must FALL BACK
   to real inference for anything outside the proven-safe set;
-- the spread()/explode_outer reshaping of the tokenizer and dedup
+- the spread()/plain-explode reshaping of the tokenizer and dedup
   corpus pipelines (tokenize parallel, one exchange) must keep row
   sets identical on the degenerate inputs the old shapes gated
   (empty/punctuation-only/NULL texts, empty token arrays).
@@ -122,8 +122,8 @@ def test_winnow_gate_matches_normalize_emptiness(spark, degenerate_docs):
 
 
 def test_bpe_doc_word_counts_degenerate_rows(spark, degenerate_docs):
-    """explode_outer + filter must drop empty/NULL/punctuation-only docs
-    exactly as the old plain-explode shape did."""
+    """The spread-then-plain-explode shape must drop empty/NULL/
+    punctuation-only docs exactly as the pre-spread shape did."""
     from projectone_spark.functions.text import bpe_doc_word_counts
 
     wf = bpe_doc_word_counts(degenerate_docs)
@@ -135,7 +135,7 @@ def test_bpe_doc_word_counts_degenerate_rows(spark, degenerate_docs):
 def test_surprisal_folds_degenerate_rows(spark, degenerate_docs):
     """uni/bigram surprisal over degenerate docs: only docs with >= 1
     token (unigram) / >= 2 tokens (bigram) emit rows, and the scores
-    fold the same integers as before the spread/outer-explode change."""
+    fold the same integers as before the spread/explode change."""
     from projectone_spark.functions.text import (
         bigram_surprise,
         unigram_surprise,
@@ -175,3 +175,23 @@ def test_spread_by_key_partitioning_reused(spark):
     # subtree in explain output — no tokenize chain may appear there.
     below_exchange = plan.split("Exchange")[-1]
     assert "regexp_replace" not in below_exchange, plan
+
+
+@pytest.mark.parametrize("default", [1, 2, 4, 32])
+@pytest.mark.parametrize("size_bytes", [1, 1 << 50])
+def test_spread_width_within_default_parallelism(default, size_bytes):
+    """The derived spread width stays in [min(4, default), default]: a
+    tiny input gets the floor, a huge one saturates at
+    defaultParallelism, and a session with fewer than 4 cores never
+    spreads wider than its cores. A stub frame stands in for the
+    session and the plan statistics, so no second JVM is needed."""
+    from types import SimpleNamespace as NS
+
+    from projectone_spark.functions.text import _spread_width
+
+    stats = NS(sizeInBytes=lambda: size_bytes)
+    plan = NS(optimizedPlan=lambda: NS(stats=lambda: stats))
+    df = NS(sparkSession=NS(sparkContext=NS(defaultParallelism=default)),
+            _jdf=NS(queryExecution=lambda: plan))
+    want = min(4, default) if size_bytes == 1 else default
+    assert _spread_width(df) == want

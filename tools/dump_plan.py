@@ -7,13 +7,15 @@ optimization workflow: run with tag=before on the untouched code, tag=after
 on the optimized code.
 
 Usage:
-    PYTHONPATH=/root/repo python tools/dump_plan.py before q1 q2 ...
+    python tools/dump_plan.py before q1 q2 ...
 """
 
 from __future__ import annotations
 
 import os
 import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

@@ -20,6 +20,8 @@ import os
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 
 def _jobs_between(spark, t0_ms: int, t1_ms: int) -> list[dict]:
     jstore = spark.sparkContext._jsc.sc().statusStore()
