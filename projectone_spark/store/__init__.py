@@ -11,8 +11,9 @@ on, with plain parquet + a manifest:
   append adds a directory instead of rewriting old files (a miniature
   add-file log).
 
-When ``delta-spark`` IS importable the store transparently uses Delta
-(``format("delta")``, ``replaceWhere``) — see ``_delta_available``.
+The store always writes this parquet layout, whether or not ``delta-spark``
+is importable; real Delta tables go through ``store.delta_backend``'s
+``DeltaStore``, which a caller constructs explicitly.
 
 Scale notes: data directories may be hive-partitioned (``partition_by``);
 ``selective_overwrite`` with explicit partition values replaces only the
@@ -32,13 +33,6 @@ from collections.abc import Sequence
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-
-try:  # pragma: no cover - delta not present in this environment
-    from delta.tables import DeltaTable  # noqa: F401
-
-    _delta_available = True
-except ImportError:
-    _delta_available = False
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -299,53 +293,112 @@ class TableStore:
         return d
 
     def _write_dir(self, df: DataFrame, path: str,
-                   partition_by: Sequence[str] | None,
-                   capture_schema: bool = True) -> str | None:
+                   partition_by: Sequence[str] | None) -> None:
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
-        if not capture_schema:
-            return None
-        derived = (None if partition_by
-                   else _derived_readback_schema(df.schema))
-        if derived is not None:
-            return derived
-        return self._dir_schema(df.sparkSession, path, partition_by)
 
     def _dir_schema(self, spark: SparkSession, path: str,
                     partition_by: Sequence[str] | None) -> str:
         """Read-back schema of a just-written data directory, captured
-        EMPIRICALLY (one footer-inference pass at write time) and recorded
-        in the manifest so every later read supplies it explicitly —
-        Delta/Iceberg keep the schema in table metadata for the same
-        reason (r12, guide §1.2): schema inference costs one driver-side
-        Spark job per directory per read, and a multi-commit partitioned
-        snapshot pays it per commit dir on every open. Capturing what
-        inference RETURNS (not ``df.schema``) keeps read-back types —
-        partition-value inference, parquet nullability — bit-identical to
-        the uninstrumented path."""
+        EMPIRICALLY by one inference pass at write time and recorded in the
+        manifest, so no later read pays inference's driver-side job (Delta
+        and Iceberg keep the schema in table metadata for the same reason).
+        Capturing what inference RETURNS keeps read-back types — partition
+        values, parquet nullability — bit-identical to an inferring read."""
         reader = spark.read
         if partition_by:
             reader = reader.option("basePath", path)
         return reader.parquet(path).schema.json()
 
-    def _stats_for(self, dirs: list[str],
+    def _stats_for(self, paths: list[str],
                    stats_columns: list[str],
-                   set_columns: list[str] | None = None) -> list[dict]:
+                   set_columns: list[str]) -> list[dict]:
         # entries are recorded even with no declared stats columns:
         # path/rows/bytes cost one footer read each, and the hive partition
         # values embedded in paths make partition pruning (read_where,
         # dml.delete_where/update_where) work on any partitioned table
         from projectone_spark.store.skipping import file_stats, value_set_stats
 
-        entries = file_stats(dirs, stats_columns)
-        for f in entries:  # inline distinct-set index for =/IN pruning
-            if set_columns:
-                vals = value_set_stats(f["path"], set_columns)
-                if vals:
-                    f["vals"] = vals
+        entries = file_stats(paths, stats_columns)
+        for f in entries if set_columns else []:  # =/IN pruning index
+            vals = value_set_stats(f["path"], set_columns)
+            if vals:
+                f["vals"] = vals
         return entries
+
+    def _publish(self, name: str, d: str, df: DataFrame,
+                 partition_by: Sequence[str] | None, operation: str,
+                 base: dict | None, *,
+                 links: dict[str, list[str]] | None = None,
+                 append: bool = False,
+                 stats_columns: Sequence[str] | None = None,
+                 set_columns: Sequence[str] | None = None,
+                 metrics: dict | None = None,
+                 txn: tuple[str, int] | None = None,
+                 expected_base: int | None = None,
+                 manifest_extra: dict | None = None) -> int:
+        """Publish ``d``, into which ``df`` was just written, as a version
+        of ``name``. Every write commits here, so a dir's read-back schema
+        and its files' stats are computed once, when the files are added
+        (Delta's add-file log). ``base`` is the manifest the write was
+        prepared against; unset stats/set columns inherit from it.
+
+        - ``links`` (``{base dir: [file paths relative to it]}``) are
+          hard-linked into ``d`` after its fresh data is described; their
+          stats entries carry forward re-pathed, and only files without
+          one (fresh, or from a dir committed without entries) are read.
+        - The schema is derived from ``df.schema`` where
+          ``_derived_readback_schema`` proves it, else inferred once from
+          the fresh files. A dir holding links records it only when every
+          dir it links from carries that same schema; otherwise readers
+          infer and ``read_merged`` keeps its footer-merging path.
+        - ``append`` adds ``d`` to the current dirs; a concurrent commit
+          retries only the manifest merge (Delta's ConcurrentAppend).
+        """
+        part, prev = list(partition_by or []), base or {}
+        cols = list(stats_columns if stats_columns is not None
+                    else prev.get("stats_columns") or [])
+        sets = list(set_columns if set_columns is not None
+                    else prev.get("set_columns") or [])
+        links = links or {}
+        schema = None if part else _derived_readback_schema(df.schema)
+        # nothing fresh next to links (a DML that dropped every touched
+        # row) leaves nothing to infer from
+        if schema is None and (not links or _parquet_files([d])):
+            schema = self._dir_schema(df.sparkSession, d, part)
+        if any((prev.get("schemas") or {}).get(bd) != schema for bd in links):
+            schema = None
+        roots = {os.path.join(bd, rel): os.path.join(d, rel)
+                 for bd, rels in links.items() for rel in rels}
+        for src, dst in roots.items():
+            _link_tree(src, dst)
+        entries = {f["path"]: f
+                   for f in _carried(prev.get("files") or [], roots)}
+        paths = _parquet_files([d])
+        entries.update((f["path"], f) for f in self._stats_for(
+            [p for p in paths if p not in entries], cols, sets))
+        files = [entries[p] for p in paths]
+        for _ in range(20):
+            prior = (base or {}) if append else {}
+            if prior and prior["partition_by"] != part:
+                raise ValueError(f"append partition_by {part} != table "
+                                 f"{prior['partition_by']}")
+            try:
+                return self._commit(
+                    name, [*prior.get("dirs", []), d], part, operation,
+                    metrics, stats_columns=cols, set_columns=sets,
+                    files=[*(prior.get("files") or []), *files], txn=txn,
+                    expected_base=(prior.get("version", -1) if append
+                                   else expected_base),
+                    manifest_extra=manifest_extra, schemas={d: schema})
+            except ConcurrentWriteError:
+                if not append:
+                    raise
+                base = self.manifest(name)
+        raise ConcurrentWriteError(
+            f"append to '{name}' lost the commit race 20 times")
 
     def overwrite(self, spark: SparkSession, df: DataFrame, name: str,
                   partition_by: Sequence[str] | None = None,
@@ -362,58 +415,31 @@ class TableStore:
         (skipping.value_set_stats) for =/IN pruning, inherited by appends
         like ``stats_columns``."""
         m = self.manifest(name)
-        cols = list(stats_columns if stats_columns is not None
-                    else (m.get("stats_columns") or []) if m else [])
-        sets = list(set_columns if set_columns is not None
-                    else (m.get("set_columns") or []) if m else [])
         d = self._new_data_dir(name)
-        sch = self._write_dir(df, d, partition_by)
-        return self._commit(name, [d], list(partition_by or []), _operation,
-                            stats_columns=cols, set_columns=sets,
-                            files=self._stats_for([d], cols, sets),
-                            expected_base=_expected_base,
-                            manifest_extra=manifest_extra,
-                            schemas={d: sch})
+        self._write_dir(df, d, partition_by)
+        return self._publish(name, d, df, partition_by, _operation, m,
+                             stats_columns=stats_columns,
+                             set_columns=set_columns,
+                             expected_base=_expected_base,
+                             manifest_extra=manifest_extra)
 
     def append(self, spark: SparkSession, df: DataFrame, name: str,
                partition_by: Sequence[str] | None = None,
                stats_columns: Sequence[str] | None = None,
                set_columns: Sequence[str] | None = None,
                txn: tuple[str, int] | None = None) -> int:
-        # optimistic concurrency: the data directory written once is valid
-        # under ANY concurrent commit (append never touches other dirs), so
-        # on conflict only the manifest read-merge-commit retries — Delta's
-        # ConcurrentAppend semantics, without rewriting data
-        d = None
-        new_files: list[dict] | None = None
-        for _ in range(20):
-            m = self.manifest(name)
-            if m is not None and partition_by and list(partition_by) != m["partition_by"]:
-                raise ValueError(
-                    f"append partition_by {list(partition_by)} != table {m['partition_by']}")
-            part = list(partition_by or (m["partition_by"] if m else []))
-            cols = list(stats_columns if stats_columns is not None
-                        else (m.get("stats_columns") or []) if m else [])
-            sets = list(set_columns if set_columns is not None
-                        else (m.get("set_columns") or []) if m else [])
-            if d is None:
-                d = self._new_data_dir(name)
-                new_schema = self._write_dir(df, d, part)
-                new_files = self._stats_for([d], cols, sets)
-            dirs = ([*m["dirs"], d] if m is not None else [d])
-            # incremental stats: footers of the NEW directory only, carried
-            # alongside the previous commit's file list (Delta add-file style)
-            files = [*(m.get("files") or [] if m else []), *new_files]
-            try:
-                return self._commit(name, dirs, part, "append",
-                                    stats_columns=cols, set_columns=sets,
-                                    files=files, txn=txn,
-                                    expected_base=m["version"] if m else -1,
-                                    schemas={d: new_schema})
-            except ConcurrentWriteError:
-                continue
-        raise ConcurrentWriteError(
-            f"append to '{name}' lost the commit race 20 times")
+        # append never touches other dirs, so the data directory is written
+        # once and stays valid under ANY concurrent commit (see _publish)
+        m = self.manifest(name)
+        part = list(partition_by or (m["partition_by"] if m else []))
+        if m is not None and part != m["partition_by"]:
+            raise ValueError(
+                f"append partition_by {part} != table {m['partition_by']}")
+        d = self._new_data_dir(name)
+        self._write_dir(df, d, part)
+        return self._publish(name, d, df, part, "append", m, append=True,
+                             stats_columns=stats_columns,
+                             set_columns=set_columns, txn=txn)
 
     def selective_overwrite(self, spark: SparkSession, df: DataFrame, name: str,
                             replace_where: str | None = None,
@@ -437,41 +463,27 @@ class TableStore:
 
         if partition_values and part and set(partition_values) <= set(part):
             new_dir = self._new_data_dir(name)
-            data_schema = self._write_dir(df, new_dir, part)
-            # re-link every old partition dir that is NOT being replaced
+            self._write_dir(df, new_dir, part)
+            # re-link every old file whose partition path names no replaced
+            # value (at any nesting level) and that the new data did not
+            # rewrite; a partition may sit in several commit dirs, and
+            # every one of them is kept
             replaced = {
                 f"{col}={v}" for col, vals in partition_values.items() for v in vals
             }
-            linked = False
+            fresh = {os.path.dirname(os.path.relpath(p, new_dir))
+                     for p in _parquet_files([new_dir])}
+            links: dict[str, list[str]] = {}
             for old in m["dirs"]:
-                for entry in os.listdir(old):
-                    src = os.path.join(old, entry)
-                    if not os.path.isdir(src) or entry in replaced:
-                        continue
-                    dst = os.path.join(new_dir, entry)
-                    if not os.path.exists(dst):
-                        _link_tree(src, dst)
-                        linked = True
-            cols = m.get("stats_columns") or []
-            sets = m.get("set_columns") or []
-            # a re-linked dir mixes fresh files with files from prior
-            # commits; record its read-back schema ONLY when uniformity
-            # is provable — every linked-from dir carries the same
-            # recorded schema and both the fresh data (pre-link) and the
-            # whole dir (post-link) infer to exactly it. Otherwise leave
-            # the dir unrecorded: readers fall back to inference and
-            # read_merged keeps its true footer-merging path (its fast
-            # path relies on recorded dirs being internally uniform).
-            post_schema = self._dir_schema(spark, new_dir, part)
-            prior = {(m.get("schemas") or {}).get(d) for d in m["dirs"]}
-            uniform = (not linked) or (prior == {post_schema}
-                                       and data_schema == post_schema)
-            return self._commit(name, [new_dir], part, "selective_overwrite",
-                                {"replaced_partitions": sorted(replaced)},
-                                stats_columns=cols, set_columns=sets,
-                                files=self._stats_for([new_dir], cols, sets),
-                                schemas=({new_dir: post_schema}
-                                         if uniform else None))
+                for p in _parquet_files([old]):
+                    rel = os.path.relpath(p, old)
+                    leaf = os.path.dirname(rel)
+                    if leaf not in fresh and not replaced & set(leaf.split(os.sep)):
+                        links.setdefault(old, []).append(rel)
+            return self._publish(name, new_dir, df, part,
+                                 "selective_overwrite", m, links=links,
+                                 metrics={"replaced_partitions":
+                                          sorted(replaced)})
 
         if replace_where is None and partition_values:
             replace_where = " AND ".join(
@@ -508,7 +520,7 @@ def _derived_readback_schema(schema) -> str | None:
     type outside the proven-safe set (or decimal, handled explicitly)
     appears and the caller must fall back to real inference. Pinned
     against actual inference across the full type matrix by
-    ``tests/test_r13_fastpaths.py``."""
+    ``tests/test_store.py``."""
     def nullable(node):
         if isinstance(node, dict):
             t = node.get("type")
@@ -622,18 +634,42 @@ def last_commit_stats(store: TableStore, name: str) -> dict:
 
 
 def _link_tree(src: str, dst: str) -> None:
-    """Hard-link a directory tree (fallback: copy). Stands in for the
-    manifest-only file re-add a cloud table format would do."""
-    os.makedirs(dst, exist_ok=True)
-    for entry in os.listdir(src):
-        s, d = os.path.join(src, entry), os.path.join(dst, entry)
-        if os.path.isdir(s):
-            _link_tree(s, d)
-        else:
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
+    """Hard-link a file or a directory tree (fallback: copy). Stands in
+    for the manifest-only file re-add a cloud table format would do."""
+    if os.path.isdir(src):
+        os.makedirs(dst, exist_ok=True)
+        for entry in os.listdir(src):
+            _link_tree(os.path.join(src, entry), os.path.join(dst, entry))
+        return
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
+
+
+def _carried(files: list[dict], roots: dict[str, str]) -> list[dict]:
+    """The stats entries among ``files`` that lie under a linked root (a
+    file or a directory), re-pathed to where that root was linked."""
+    out = []
+    for f in files:
+        root = f["path"]
+        while root not in roots and os.path.dirname(root) != root:
+            root = os.path.dirname(root)
+        if root in roots:
+            out.append({**f, "path": roots[root] + f["path"][len(root):]})
+    return out
+
+
+def _parquet_files(dirs: Sequence[str]) -> list[str]:
+    """Every parquet data file under ``dirs``, in a stable walk order."""
+    out = []
+    for d in dirs:
+        for dirpath, _, files in os.walk(d):
+            for fn in sorted(files):
+                if fn.endswith(".parquet"):
+                    out.append(os.path.join(dirpath, fn))
+    return out
 
 
 def read_changes(store: TableStore, spark: SparkSession, name: str,

@@ -46,15 +46,12 @@ def write_bucketed(store, spark: SparkSession, df: DataFrame, name: str,
     if sort_by:
         writer = writer.sortBy(*sort_by)
     writer.saveAsTable(cat)
-    cols = list(stats_columns or [])
-    v = store._commit(name, [d], [], "bucketed_overwrite",
-                      {"bucket_by": list(bucket_by),
-                       "num_buckets": num_buckets,
-                       "sort_by": list(sort_by or []),
-                       "catalog_name": cat},
-                      stats_columns=cols,
-                      files=store._stats_for([d], cols))
-    return v
+    return store._publish(name, d, df, [], "bucketed_overwrite", None,
+                          stats_columns=stats_columns,
+                          metrics={"bucket_by": list(bucket_by),
+                                   "num_buckets": num_buckets,
+                                   "sort_by": list(sort_by or []),
+                                   "catalog_name": cat})
 
 
 def read_bucketed(store, spark: SparkSession, name: str) -> DataFrame:
@@ -66,7 +63,7 @@ def read_bucketed(store, spark: SparkSession, name: str) -> DataFrame:
     info = m["metrics"]
     cat = info["catalog_name"]
     if not spark.catalog.tableExists(cat):
-        schema = spark.read.parquet(*m["dirs"]).schema
+        schema = store.read(spark, name).schema
         cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
                          for f in schema.fields)
         sort = (f"SORTED BY ({', '.join(info['sort_by'])}) "

@@ -26,7 +26,7 @@ from collections.abc import Mapping, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from projectone_spark.store import TableStore
+from projectone_spark.store import TableStore, _parquet_files
 from projectone_spark.store.skipping import predicates_to_sql, prune_files
 
 
@@ -46,16 +46,6 @@ def _split_candidates(m: dict, predicates) -> tuple[set[str], list[str]]:
     uncovered = [d for d in m["dirs"] if d not in covered]
     kept, _ = prune_files(m, predicates)
     return {f["path"] for f in kept}, uncovered
-
-
-def _all_files(dirs: Sequence[str]) -> list[str]:
-    out = []
-    for d in dirs:
-        for dirpath, _, files in os.walk(d):
-            for fn in sorted(files):
-                if fn.endswith(".parquet"):
-                    out.append(os.path.join(dirpath, fn))
-    return out
 
 
 def _rewrite(store: TableStore, spark: SparkSession, name: str,
@@ -91,74 +81,54 @@ def _rewrite(store: TableStore, spark: SparkSession, name: str,
     part = m["partition_by"]
 
     candidates, uncovered_dirs = _split_candidates(m, predicates)
-    uncovered_files = _all_files(uncovered_dirs)
+    uncovered_files = _parquet_files(uncovered_dirs)
     # a file with no stats entry at all was never examined by pruning:
     # candidate, not linkable
     entry_paths = {f["path"] for f in (m.get("files") or [])}
-    unexamined = [p for p in _all_files(m["dirs"])
-                  if p not in entry_paths and p not in uncovered_files]
-    if not candidates and not uncovered_files and not unexamined:
-        return None
     touched_by_dir: dict[str, list[str]] = {}
-    linked: set[str] = set()
-    nd = store._new_data_dir(name)
-    os.makedirs(nd, exist_ok=True)
+    linked: dict[str, list[str]] = {}
     for d in m["dirs"]:
-        for dirpath, _, files in os.walk(d):
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
-                    continue
-                p = os.path.join(dirpath, fn)
-                if p in candidates or p in uncovered_files or p not in entry_paths:
-                    touched_by_dir.setdefault(d, []).append(p)
-                else:
-                    rel = os.path.relpath(p, d)
-                    dst = os.path.join(nd, rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    if dst not in linked:
-                        try:
-                            os.link(p, dst)
-                        except OSError:
-                            import shutil
-                            shutil.copy2(p, dst)
-                        linked.add(dst)
+        for p in _parquet_files([d]):
+            if p in candidates or p in uncovered_files or p not in entry_paths:
+                touched_by_dir.setdefault(d, []).append(p)
+            else:
+                linked.setdefault(d, []).append(os.path.relpath(p, d))
+    if not touched_by_dir:
+        return None
     # one scan of the touched subset; per-dir basePath so hive partition
-    # columns come back as real columns
+    # columns come back as real columns. An unpartitioned dir's recorded
+    # schema holds for any subset of its files, so that scan infers
+    # nothing (a subset of partition paths may infer narrower types)
+    schemas = {} if part else (m.get("schemas") or {})
     frames = []
     for d, paths in touched_by_dir.items():
         r = spark.read
         if part:
             r = r.option("basePath", d)
+        if d in schemas:
+            r = r.schema(store._schema_of(schemas[d]))
         frames.append(r.parquet(*paths))
     df = frames[0]
     for f in frames[1:]:
         df = df.unionByName(f)
     out = transform(df, residual)
-    writer = out.write.mode("append")
-    if part:
-        writer = writer.partitionBy(*part)
-    writer.parquet(nd)
-
-    rows_before = sum(_footer_rows(p)
-                      for ps in touched_by_dir.values() for p in ps)
-    rows_after = sum(_footer_rows(p) for p in _all_files([nd])
-                     if p not in linked)
-    cols = m.get("stats_columns") or []
-    new_paths = [p for p in _all_files([nd]) if p not in linked]
-    return store._commit(
-        name, [nd], part, operation,
-        {"predicate": residual,
-         "files_rewritten": sum(len(v) for v in touched_by_dir.values()),
-         "files_linked": len(linked),
-         "rows_scanned": rows_before,
-         "rows_after_rewrite": rows_after,
-         # the commit's exact read/write set: the change feed diffs ONLY
-         # these files instead of comparing whole snapshots
-         "changed_old": {d: ps for d, ps in touched_by_dir.items()},
-         "changed_new": new_paths},
-        stats_columns=cols,
-        set_columns=m.get("set_columns") or [],
-        files=store._stats_for([nd], cols, m.get("set_columns") or []),
+    nd = store._new_data_dir(name)
+    store._write_dir(out, nd, part)
+    new_paths = _parquet_files([nd])
+    return store._publish(
+        name, nd, out, part, operation, m, links=linked,
+        metrics={"predicate": residual,
+                 "files_rewritten": sum(len(v) for v in touched_by_dir.values()),
+                 "files_linked": sum(len(v) for v in linked.values()),
+                 "rows_scanned": sum(_footer_rows(p)
+                                     for ps in touched_by_dir.values()
+                                     for p in ps),
+                 "rows_after_rewrite": sum(_footer_rows(p) for p in new_paths),
+                 # the commit's exact read/write set: the change feed
+                 # diffs ONLY these files instead of comparing whole
+                 # snapshots
+                 "changed_old": touched_by_dir,
+                 "changed_new": new_paths},
         txn=txn,
         # validated index maintenance (store.indexes.drop_from_index)
         # re-stamps through the SAME atomic commit — plain DML callers

@@ -149,22 +149,14 @@ def clone(store: TableStore, name: str, target: str) -> int:
         raise FileNotFoundError(f"table '{name}' does not exist")
     if store.manifest(target) is not None:
         raise FileExistsError(f"table '{target}' already exists")
-    from projectone_spark.store import _link_tree
+    from projectone_spark.store import _carried, _link_tree
 
-    new_dirs: list[str] = []
-    remap: dict[str, str] = {}
-    for d in m["dirs"]:
-        nd = os.path.join(store._table_dir(target), os.path.basename(d))
-        os.makedirs(os.path.dirname(nd), exist_ok=True)
+    remap = {d: os.path.join(store._table_dir(target), os.path.basename(d))
+             for d in m["dirs"]}
+    for d, nd in remap.items():
         _link_tree(d, nd)
-        new_dirs.append(nd)
-        remap[d] = nd
-    files = []
-    for f in m.get("files") or []:
-        for old, new in remap.items():
-            if f["path"].startswith(old + os.sep):
-                files.append({**f, "path": new + f["path"][len(old):]})
-                break
+    new_dirs = list(remap.values())
+    files = _carried(m.get("files") or [], remap)
     src_schemas = m.get("schemas") or {}
     return store._commit(target, new_dirs, list(m["partition_by"]), "clone",
                          {"cloned_from": name, "source_version": m["version"]},

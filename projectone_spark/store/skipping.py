@@ -61,43 +61,39 @@ def _norm_stat(v):
     return v
 
 
-def file_stats(dirs: Sequence[str], columns: Sequence[str]) -> list[dict]:
-    """Per-file {path, rows, bytes, min, max} for ``columns``, from parquet
-    footers only. A column missing trustworthy stats in any row group is
-    dropped from that file's entry (pruning then keeps the file)."""
+def file_stats(paths: Sequence[str], columns: Sequence[str]) -> list[dict]:
+    """Per-file {path, rows, bytes, min, max} for ``columns``, from the
+    parquet footers of ``paths`` only. A column missing trustworthy stats
+    in any row group is dropped from that file's entry (pruning then keeps
+    the file)."""
     import pyarrow.parquet as pq
 
     out: list[dict] = []
-    for d in dirs:
-        for dirpath, _, files in os.walk(d):
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
+    for path in paths:
+        md = pq.ParquetFile(path).metadata
+        mins: dict = {}
+        maxs: dict = {}
+        bad: set[str] = set()
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            for ci in range(g.num_columns):
+                c = g.column(ci)
+                name = c.path_in_schema
+                if name not in columns or name in bad:
                     continue
-                path = os.path.join(dirpath, fn)
-                md = pq.ParquetFile(path).metadata
-                mins: dict = {}
-                maxs: dict = {}
-                bad: set[str] = set()
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for ci in range(g.num_columns):
-                        c = g.column(ci)
-                        name = c.path_in_schema
-                        if name not in columns or name in bad:
-                            continue
-                        st = c.statistics
-                        lo = _norm_stat(st.min) if st is not None and st.has_min_max else None
-                        hi = _norm_stat(st.max) if st is not None and st.has_min_max else None
-                        if lo is None or hi is None:
-                            bad.add(name)
-                            mins.pop(name, None)
-                            maxs.pop(name, None)
-                            continue
-                        mins[name] = lo if name not in mins else min(mins[name], lo)
-                        maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-                out.append({"path": path, "rows": md.num_rows,
-                            "bytes": os.path.getsize(path),
-                            "min": mins, "max": maxs})
+                st = c.statistics
+                lo = _norm_stat(st.min) if st is not None and st.has_min_max else None
+                hi = _norm_stat(st.max) if st is not None and st.has_min_max else None
+                if lo is None or hi is None:
+                    bad.add(name)
+                    mins.pop(name, None)
+                    maxs.pop(name, None)
+                    continue
+                mins[name] = lo if name not in mins else min(mins[name], lo)
+                maxs[name] = hi if name not in maxs else max(maxs[name], hi)
+        out.append({"path": path, "rows": md.num_rows,
+                    "bytes": os.path.getsize(path),
+                    "min": mins, "max": maxs})
     return out
 
 

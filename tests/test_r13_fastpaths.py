@@ -1,11 +1,8 @@
 """Round-13 optimization fast paths.
 
-Every entry pins an r13 optimization's bit-identity contract:
+Every entry pins an r13 optimization's bit-identity contract (the store's
+derived read-back schema is pinned in ``tests/test_store.py``):
 
-- the store's DERIVED read-back schema (zero-job replacement for the
-  write-time inference pass) must be byte-identical to what inference
-  returns, across the full supported type matrix, and must FALL BACK
-  to real inference for anything outside the proven-safe set;
 - the spread()/plain-explode reshaping of the tokenizer and dedup
   corpus pipelines (tokenize parallel, one exchange) must keep row
   sets identical on the degenerate inputs the old shapes gated
@@ -16,88 +13,6 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
-from pyspark.sql import types as T
-
-
-def _roundtrip(spark, df, tmpdir):
-    from projectone_spark.store import _derived_readback_schema
-
-    derived = _derived_readback_schema(df.schema)
-    path = str(tmpdir)
-    df.write.mode("overwrite").parquet(path)
-    inferred = spark.read.parquet(path).schema.json()
-    return derived, inferred
-
-
-def test_derived_readback_schema_full_type_matrix(spark, tmp_path):
-    df = spark.sql("""
-      SELECT * FROM VALUES
-        (CAST(2 AS TINYINT), CAST(3 AS SMALLINT), CAST(4 AS INT),
-         CAST(5 AS BIGINT), CAST(6.5 AS FLOAT), CAST(7.5 AS DOUBLE),
-         'x', CAST('ab' AS BINARY), true,
-         DATE'2024-01-01', TIMESTAMP'2024-01-01 10:00:00',
-         TIMESTAMP_NTZ'2024-01-01 10:00:00',
-         CAST(1.25 AS DECIMAL(10,2)), array(1.5D, 2.5D),
-         named_struct('a', 1L, 'b', array('s')), map('k', 1L))
-      t(ty, sh, i, l, f, d, s, bin, bo, dt, ts, tsn, dec, arr, st, mp)""")
-    derived, inferred = _roundtrip(spark, df, tmp_path)
-    assert derived == inferred
-
-
-def test_derived_readback_schema_forces_nullability(spark, tmp_path):
-    """Non-nullable writer schemas (VALUES inline tables, explicit DDL)
-    read back all-nullable from parquet; the derived schema must apply
-    the same forcing recursively (array containsNull, map
-    valueContainsNull, nested struct fields)."""
-    schema = T.StructType([
-        T.StructField("a", T.LongType(), False),
-        T.StructField("b", T.ArrayType(T.DoubleType(), False), False),
-        T.StructField("c", T.StructType(
-            [T.StructField("x", T.StringType(), False)]), False),
-        T.StructField("m", T.MapType(
-            T.StringType(), T.ArrayType(T.LongType(), False), False), False),
-    ])
-    df = spark.createDataFrame([(1, [1.0], ("s",), {"k": [2]})], schema)
-    derived, inferred = _roundtrip(spark, df, tmp_path)
-    assert derived == inferred
-
-
-def test_derived_readback_schema_zero_rows(spark, tmp_path):
-    df = spark.createDataFrame([], "a bigint, b array<double>")
-    derived, inferred = _roundtrip(spark, df, tmp_path)
-    assert derived == inferred
-
-
-def test_derived_readback_schema_falls_back_on_unprovable(spark):
-    from projectone_spark.store import _derived_readback_schema
-
-    # calendar intervals have no parquet read-back story at all
-    iv = spark.sql("SELECT INTERVAL '1' YEAR AS y")
-    assert _derived_readback_schema(iv.schema) is None
-    # char/varchar ride field METADATA whose round-trip is not proven —
-    # any non-empty metadata must route to real inference
-    cv = T.StructType([T.StructField(
-        "c", T.StringType(), True,
-        metadata={"__CHAR_VARCHAR_TYPE_STRING": "char(4)"})])
-    assert _derived_readback_schema(cv) is None
-
-
-def test_store_write_records_derived_schema_and_reads_back(spark, tmp_path):
-    """End-to-end: an unpartitioned store write records the derived
-    schema in the manifest, and the recorded string equals what
-    inference would have recorded (so reads plan identically)."""
-    from projectone_spark.store import TableStore
-
-    store = TableStore(str(tmp_path / "store"))
-    df = spark.range(5).select(F.col("id").alias("k"),
-                               (F.col("id") * 2.0).alias("v"))
-    store.overwrite(spark, df, "t")
-    m = store.manifest("t")
-    [(d, recorded)] = list(m["schemas"].items())
-    assert recorded == spark.read.parquet(d).schema.json()
-    got = store.read(spark, "t")
-    assert got.schema.json() == recorded
-    assert got.count() == 5
 
 
 @pytest.fixture()
